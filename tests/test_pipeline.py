@@ -4,7 +4,7 @@ flatten -> sink -> catalog -> quality checks)."""
 
 from __future__ import annotations
 
-from datetime import datetime
+from datetime import datetime, timezone
 
 import pytest
 
@@ -352,3 +352,52 @@ def test_existence_probe_rejects_nonlocal_uris(spark, tmp_path):
         cat.missing_files().collect()
     with pytest.raises(Exception, match="non-local URI"):
         cat.check_not_empty()
+
+
+def test_check_not_empty_matches_the_three_queries(spark, tmp_path):
+    """check_not_empty folds total, the MAX(ts) anchor and the latest
+    file into one aggregate; its dict must equal the one the three
+    public queries give, including the batch_id tie-break on equal ts
+    and the lookback edge."""
+    import os
+
+    import pyarrow as pa
+
+    from transit_feed_etl_spark.pipeline.catalog import CATALOG_ARROW_SCHEMA
+
+    cat = FileCatalog(spark, str(tmp_path / "catalog"))
+    empty = cat.check_not_empty()
+    assert empty == {"passed": False, "total_records": 0, "recent_records": 0,
+                     "latest_file": None, "latest_file_exists": False}
+
+    def at(h, m=0, s=0):
+        return datetime(2024, 3, 1, h, m, s, tzinfo=timezone.utc)
+
+    rows = [  # (batch_id, file, ts, count)
+        (0, "a", at(10), 5),
+        (1, "b", at(12), 7),
+        (2, "c", at(12), 11),  # same ts as b: the higher batch_id is latest
+        (3, "d", at(11, 0, 0), 13),  # exactly one hour before the anchor
+        (4, "e", at(10, 59, 59), 17),
+    ]
+    for bid, name, ts, n in rows:
+        path = str(tmp_path / f"{name}.parquet")
+        if name != "c":
+            open(path, "w").close()
+        cat.append_rows(pa.Table.from_pylist(
+            [{"batch_id": bid, "file_path": path, "ts": ts, "record_count": n,
+              "created_at": ts}], CATALOG_ARROW_SCHEMA), bid)
+
+    for lookback in (1, 2):
+        latest = cat.latest_file()["file_path"]
+        expected = {
+            "passed": False,  # the latest file (c) does not exist
+            "total_records": cat.total_records(),
+            "recent_records": cat.recent_records(lookback),
+            "latest_file": latest,
+            "latest_file_exists": os.path.exists(latest),
+        }
+        assert cat.check_not_empty(lookback) == expected
+    assert expected["latest_file"].endswith("c.parquet")
+    assert cat.check_not_empty(1)["recent_records"] == 7 + 11 + 13
+    assert cat.check_not_empty(2)["recent_records"] == 53

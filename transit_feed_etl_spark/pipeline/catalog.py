@@ -18,6 +18,7 @@ import os
 import re
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -72,6 +73,13 @@ def _require_local(path: str) -> str:
     )
 
 
+_ARROW_TYPES = {
+    T.LongType: pa.int64(),
+    T.StringType: pa.string(),
+    T.TimestampType: pa.timestamp("us", tz="UTC"),
+    T.DoubleType: pa.float64(),
+}
+
 CATALOG_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType(), False),
@@ -85,6 +93,29 @@ CATALOG_SCHEMA = T.StructType(
         T.StructField("bbox_maxy", T.DoubleType(), True),
     ]
 )
+
+
+# The same row as Arrow, for rows built outside Spark (the GeoParquet
+# writer's tasks, `FileCatalog.append_rows`).
+CATALOG_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field(f.name, _ARROW_TYPES[type(f.dataType)], f.nullable)
+        for f in CATALOG_SCHEMA.fields
+    ]
+)
+
+
+def write_parquet_atomic(table: pa.Table, path: str) -> None:
+    """Write `table` to a dot-prefixed temp file beside `path`, then
+    rename it into place: readers (Spark and glob skip dot files) see
+    the old file or the whole new one, never a partial write."""
+    import pyarrow.parquet as pq
+
+    d, name = os.path.split(path)
+    os.makedirs(d or ".", exist_ok=True)
+    tmp = os.path.join(d, f".{name}.{os.getpid()}.tmp")
+    pq.write_table(table, tmp)
+    os.replace(tmp, path)
 
 
 @dataclass
@@ -168,6 +199,16 @@ class FileCatalog:
         )
         rows.write.mode("append").parquet(self.path)
 
+    def append_rows(self, rows: pa.Table, batch_id: int) -> None:
+        """Append catalog rows built elsewhere (`CATALOG_ARROW_SCHEMA`;
+        the GeoParquet writer returns one per file) as one file named
+        after the batch, so a replayed batch replaces its own rows
+        instead of adding a second copy. A driver-side write: no Spark
+        job."""
+        if rows.num_rows:
+            name = f"batch-{batch_id:012d}.parquet"
+            write_parquet_atomic(rows, os.path.join(_require_local(self.path), name))
+
     # ---- quality-check queries (A17-A21, reference gtfs_rt_assets.py:200-245)
 
     def total_records(self) -> int:
@@ -228,18 +269,31 @@ class FileCatalog:
 
     def check_not_empty(self, lookback_hours: int = 1) -> dict:
         """A21: the reference's asset check — total>0, recent>0, latest
-        file exists — returned as a metrics dict (A22 metadata parity)."""
-        total = self.total_records()
-        recent = self.recent_records(lookback_hours)
-        latest = self.latest_file()
-        latest_exists = latest is not None and os.path.exists(
-            _require_local(latest["file_path"])
-        )
+        file exists — returned as a metrics dict (A22 metadata parity).
+        Total, MAX(ts) and the latest file (ts, then batch_id, as in
+        `latest_file`) come from one aggregate; the recent sum is one
+        filter anchored on that MAX(ts), as in `recent_records`."""
+        cat = self.read()
+        row = cat.agg(
+            F.coalesce(F.sum("record_count"), F.lit(0)).alias("total"),
+            F.max(F.unix_micros("ts")).alias("anchor"),
+            F.max_by("file_path", F.struct("ts", "batch_id")).alias("latest"),
+        ).collect()[0]
+        total, latest = row["total"], row["latest"]
+        recent = 0
+        if row["anchor"] is not None:
+            since = row["anchor"] - lookback_hours * 3_600_000_000
+            recent = (
+                cat.filter(F.unix_micros("ts") >= since)
+                .agg(F.coalesce(F.sum("record_count"), F.lit(0)).alias("recent"))
+                .collect()[0]["recent"]
+            )
+        latest_exists = latest is not None and os.path.exists(_require_local(latest))
         return {
             "passed": bool(total > 0 and recent > 0 and latest_exists),
             "total_records": int(total),
             "recent_records": int(recent),
-            "latest_file": latest["file_path"] if latest else None,
+            "latest_file": latest,
             "latest_file_exists": latest_exists,
         }
 

@@ -151,20 +151,27 @@ def with_geometry(df: DataFrame) -> DataFrame:
     ).withColumn("crs", F.lit(CRS))
 
 
-def validate_positions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """A8 quarantine pattern: split a batch into (good, quarantined).
-    Quarantine = coordinates present but outside WGS84 bounds. The
-    reference logs-and-drops failing feeds (gtfs_rt_assets.py:85-94);
-    at scale a side table preserves the evidence instead."""
-    bad = (
-        F.col("latitude").isNotNull()
-        & F.col("longitude").isNotNull()
-        & (
-            (F.abs(F.col("latitude")) > 90.0)
-            | (F.abs(F.col("longitude")) > 180.0)
-        )
+def invalid_position() -> Column:
+    """A8 quarantine predicate: coordinates present but outside WGS84
+    bounds."""
+    lat, lon = F.col("latitude"), F.col("longitude")
+    return (
+        lat.isNotNull()
+        & lon.isNotNull()
+        & ((F.abs(lat) > 90.0) | (F.abs(lon) > 180.0))
     )
+
+
+def validate_positions(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """A8 quarantine pattern: split a batch into (good, quarantined) by
+    `invalid_position`. The reference logs-and-drops failing feeds
+    (gtfs_rt_assets.py:85-94); at scale a side table preserves the
+    evidence instead."""
+    bad = invalid_position()
     return df.filter(~bad), df.filter(bad)
+
+
+PARTITION_COLS = ("year", "month", "day", "hour")
 
 
 def with_time_partitions(df: DataFrame, ts_col: str = "ts") -> DataFrame:
@@ -187,12 +194,11 @@ def write_partitioned(
     columns first so each Hive partition is written by few tasks —
     the small-files guard the reference lacks (one file per minute,
     gtfs_rt_assets.py:138, melts the namenode at 100 TB)."""
-    part_cols = ["year", "month", "day", "hour"]
     out = with_time_partitions(df) if "year" not in df.columns else df
     (
-        out.repartition(files_per_partition * 4, *part_cols)
+        out.repartition(files_per_partition * 4, *PARTITION_COLS)
         .write.mode(mode)
-        .partitionBy(*part_cols)
+        .partitionBy(*PARTITION_COLS)
         .parquet(root)
     )
 

@@ -10,6 +10,9 @@ also be the right default on a real multi-executor cluster at 100 TB:
 - UTC session timezone — the reference mixed UTC writes with localtime
   comparisons (reference gtfs_rt_assets.py:181 vs :213); we standardize UTC.
 - Arrow enabled — every Pandas-UDF / toPandas boundary is Arrow-batched.
+- driver heap: half the machine's physical memory unless
+  SPARK_GRAFT_DRIVER_MEM says otherwise — a fixed large -Xmx lets the
+  JVM grow past what the host has and get OOM-killed.
 """
 
 from __future__ import annotations
@@ -17,6 +20,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of MemTotal, in whole GiB (at least 1g); 4g when the
+    machine's memory cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "4g"
+    return f"{max(1, kib // (2 * 1024 * 1024))}g"
 
 
 def get_spark(
@@ -73,7 +87,10 @@ def get_spark(
         # (measured: 8-20s re-compile vs ~2s steady-state on the LSH
         # pipeline). Static conf — must be set before the first session.
         .config("spark.sql.codegen.cache.maxEntries", "5000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

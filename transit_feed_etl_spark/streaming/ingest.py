@@ -2,7 +2,7 @@
 (A23, reference gtfs_rt_assets.py:248-257) as ONE streaming query:
 
   spool dir (fetched feed files) -> flatten -> validate/quarantine ->
-  partitioned parquet sink + catalog append + quality check, all inside
+  partitioned (Geo)Parquet sink + catalog append + quality check, all inside
   foreachBatch (exactly-once per micro-batch).
 
 The reference's process-per-run orchestration (Dagster DefaultRunLauncher,
@@ -25,10 +25,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from transit_feed_etl_spark.pipeline.catalog import FileCatalog
+from transit_feed_etl_spark.pipeline.geoparquet import write_geoparquet
 from transit_feed_etl_spark.pipeline.gtfs import (
+    PARTITION_COLS,
     RAW_FEED_SCHEMA,
     flatten_feed,
-    validate_positions,
+    invalid_position,
     with_geometry,
     with_time_partitions,
     write_partitioned,
@@ -57,57 +59,61 @@ def make_batch_processor(
 ):
     """foreachBatch sink implementing A8/A10/A12/A14-A16/A21.
 
-    ``geoparquet=True`` adds a WKB `geometry` column before the write
-    and stamps the GeoParquet `geo` footer (per-file bbox, EPSG:4326)
-    after it — full A12 GeoParquet parity in the live pipeline
-    (reference gtfs_rt_assets.py:122-141), at the same per-batch
-    boundary as the catalog append."""
+    The batch is flattened, partitioned and flagged once into one cached
+    frame; the counts, the sink write and the quarantine all read it, so
+    the spool files are read once per batch.
+
+    ``geoparquet=True`` writes the sink with the one-pass GeoParquet
+    writer (WKB `geometry` column, per-file `geo` footer with bbox and
+    EPSG:4326 — A12 parity, reference gtfs_rt_assets.py:122-141): one
+    file per hour partition named after the batch id, so a replayed
+    batch replaces its files and its catalog rows instead of adding
+    copies (the quarantine still appends). Each writer task returns its
+    file's catalog row, and the catalog gets one row per file."""
     metrics = metrics if metrics is not None else IngestMetrics()
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        flat = with_geometry(flatten_feed(batch))
-        good, bad = validate_positions(flat)
-        good = with_time_partitions(good).cache()
+        flagged = (
+            with_time_partitions(with_geometry(flatten_feed(batch)))
+            .withColumn("_bad", invalid_position())
+            .cache()
+        )
         try:
-            n = good.count()
+            counts = flagged.agg(
+                F.count_if(~F.col("_bad")).alias("good"),
+                F.count_if(F.col("_bad")).alias("bad"),
+            ).collect()[0]
+            n, n_bad = counts["good"], counts["bad"]
             metrics.batches += 1
-            if n == 0:  # A10 empty-batch guard (gtfs_rt_assets.py:114-116)
-                metrics.empty_batches += 1
-                return
-            if geoparquet:
-                from transit_feed_etl_spark.pipeline.geoparquet import (
-                    finalize_geo_metadata,
-                    wkb_point,
-                )
-
-                # the WKB column REPLACES the struct geometry: GeoParquet
-                # readers key on primary_column "geometry" being WKB
-                write_partitioned(
-                    good.withColumn(
-                        "geometry",
-                        wkb_point(F.col("longitude"), F.col("latitude")),
-                    ),
-                    out_root,
-                )
-                finalize_geo_metadata(out_root)
-            else:
-                write_partitioned(good, out_root)
-            # One catalog row per hour partition the batch touched (the
-            # reference's one-file-per-run template adapted to a
-            # partitioned layout; per-partition rows keep the bbox zone
-            # map correct when a catch-up batch spans hours).
-            catalog.append_batch_partitions(good, batch_id, out_root)
-            metrics.records += n
-
-            n_bad = bad.count()
             if n_bad:  # A8 quarantine instead of log-and-drop
                 metrics.quarantined += n_bad
                 if quarantine_root:
+                    bad = flagged.filter(F.col("_bad")).drop("_bad", *PARTITION_COLS)
                     bad.write.mode("append").parquet(quarantine_root)
+            if n == 0:  # A10 empty-batch guard (gtfs_rt_assets.py:114-116)
+                metrics.empty_batches += 1
+                return
+            good = flagged.filter(~F.col("_bad")).drop("_bad")
+            if geoparquet:
+                # the writer fills the WKB geometry in place of the struct
+                rows = write_geoparquet(
+                    good.withColumn("geometry", F.lit(None).cast("binary")),
+                    out_root,
+                    partition_by=PARTITION_COLS,
+                    batch_id=batch_id,
+                )
+                catalog.append_rows(rows, batch_id)
+            else:
+                write_partitioned(good, out_root)
+                # One catalog row per hour partition the batch touched
+                # (per-partition rows keep the bbox zone map correct when
+                # a catch-up batch spans hours).
+                catalog.append_batch_partitions(good, batch_id, out_root)
+            metrics.records += n
             if run_quality_check:  # A21 asset-check parity
                 metrics.checks.append(catalog.check_not_empty())
         finally:
-            good.unpersist()
+            flagged.unpersist()
 
     return process, metrics
 
